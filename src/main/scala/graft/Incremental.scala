@@ -323,15 +323,8 @@ object Incremental {
             Pipeline.choroDecadeEncode(wideC, tf, inputType, decade, region)
           case None => bubble.limit(0)
         }
-        // same layer union-merge as runRegion (J3, tile-join `build.sh:214`)
-        val merged = bubble.select(col("z"), col("x"), col("y"),
-            col("tile_bytes").as("bubble_bytes"))
-          .join(choro.select(col("z"), col("x"), col("y"),
-            col("tile_bytes").as("choro_bytes")), Seq("z", "x", "y"), "full_outer")
-          .select(col("z"), col("x"), col("y"),
-            concat(coalesce(col("bubble_bytes"), lit(Array.empty[Byte])),
-              coalesce(col("choro_bytes"), lit(Array.empty[Byte]))).as("tile_bytes"))
-        val rebuilt = merged.join(affectedTiles, Seq("z", "x", "y"), "left_semi")
+        val rebuilt = Pipeline.layerMerge(bubble, choro)
+          .join(affectedTiles, Seq("z", "x", "y"), "left_semi")
         if (inPlace) {
           // live-tree update: unchanged tiles already sit in outDir, so
           // only the affected files are touched — delete them first (a

@@ -134,6 +134,20 @@ object Pipeline {
       sharedBorders = knobs.sharedBorders)
   }
 
+  /** J3 layer union-merge (`tile-join`, `build.sh:214`): align the two
+    * layers' tiles on (z, x, y) and concatenate their bytes — MVT tiles
+    * concatenate at the protobuf level, repeated `layers` fields forming
+    * one tile. Shared by both rebuild modes — see [[choroTileFeatures]].
+    */
+  private[graft] def layerMerge(bubble: DataFrame, choro: DataFrame): DataFrame =
+    Joins.layerMerge(
+        bubble.select(col("z"), col("x"), col("y"), col("tile_bytes").as("bubble_bytes")),
+        choro.select(col("z"), col("x"), col("y"), col("tile_bytes").as("choro_bytes")),
+        Seq("z", "x", "y"))
+      .select(col("z"), col("x"), col("y"),
+        concat(coalesce(col("bubble_bytes"), lit(Array.empty[Byte])),
+          coalesce(col("choro_bytes"), lit(Array.empty[Byte]))).as("tile_bytes"))
+
   /** One decade's choropleth attribute join + encode over a prepared
     * [[choroTileFeatures]] frame (`tile-join --if-matched`,
     * `build.sh:208-211`). Shared by both rebuild modes — see
@@ -268,15 +282,7 @@ object Pipeline {
             choroDecadeEncode(wide, tf, inputType, decade, region)
           case None => bubble.limit(0)
         }
-        // J3 layer union-merge (`tile-join` `build.sh:214`): align on
-        // (z,x,y), concatenate layer bytes at the protobuf level.
-        val merged = bubble.select(col("z"), col("x"), col("y"),
-            col("tile_bytes").as("bubble_bytes"))
-          .join(choro.select(col("z"), col("x"), col("y"),
-            col("tile_bytes").as("choro_bytes")), Seq("z", "x", "y"), "full_outer")
-          .select(col("z"), col("x"), col("y"),
-            concat(coalesce(col("bubble_bytes"), lit(Array.empty[Byte])),
-              coalesce(col("choro_bytes"), lit(Array.empty[Byte]))).as("tile_bytes"))
+        val merged = layerMerge(bubble, choro)
         val maxZoomOut = math.max(bubbleMaxZ.getOrElse(bz.maxZoom), choroMaxZ)
         val meta = Map("name" -> s"$region-$decade",
           "type" -> "overlay",

@@ -94,29 +94,6 @@ object Geometry {
       .drop("x0", "x1", "y0", "y1")
   }
 
-  /** T1 end-to-end: interior point (pole of inaccessibility) per feature
-    * from parsed polygons — `mapshaper -points inner`
-    * (`build.sh:111-118`). The largest-area exterior ring anchors the
-    * label point, matching mapshaper's largest-part rule.
-    *
-    * Genuine per-row imperative logic (priority-queue grid refinement),
-    * so this is a typed map — the documented last-resort tier of
-    * SURVEY.md §2.11 — over (id, polygons); everything stays
-    * executor-side and distributed.
-    */
-  def interiorPoints(df: DataFrame, idCol: String, polygonsCol: String)
-      : DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("string"),
-        col(polygonsCol).cast(multiPolygonCoords.sql))
-      .as[(String, Seq[Seq[Seq[Seq[Double]]]])]
-      .flatMap { case (id, polys) =>
-        interiorPoint(polys).map { case (ix, iy) => (id, ix, iy) }
-      }
-      .toDF(idCol, "ip_lon", "ip_lat")
-  }
-
   /** Interior point of one parsed polygons value: polylabel of the
     * largest-area exterior ring (mapshaper's largest-part rule). None
     * for degenerate geometry (no polygon with a non-empty exterior

@@ -470,10 +470,6 @@ object TextStats {
     "fr" -> Seq("le", "les", "est", "et", "que", "de", "un", "une", "pour", "dans"),
     "zh" -> Seq("de5", "shi4", "le5", "zai4", "he2", "you3", "wo3", "ta1", "zhe4", "bu4"))
 
-  /** Per-language marker-hit score columns (`score_<lang>`). */
-  def langScores(textCol: String): Seq[(String, Column)] =
-    langScoresFromTokens(tokens(col(textCol)))
-
   /** All marker scores in ONE native tokenization pass
     * ([[graft.functions.LexiconScoresExpr]]) — the hot-path form of
     * [[langScoresFromTokens]]: one dictionary probe per token instead of

@@ -147,10 +147,4 @@ object Mvt {
     writeBytesField(tile, 3, layer.toByteArray)
     tile.toByteArray
   }
-
-  /** J3 layer union-merge (`tile-join a.mbtiles b.mbtiles`,
-    * `build.sh:214`): MVT tiles concatenate at the protobuf level —
-    * repeated `layers` fields from both byte strings form one tile.
-    */
-  def mergeTiles(a: Array[Byte], b: Array[Byte]): Array[Byte] = a ++ b
 }

@@ -242,7 +242,8 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
   test("shape pivot plan: one CSV scan; pivot hash + presentation sort only exchanges") {
     val long = graft.sources.Sources.readCsv(spark, fixtureCsv,
       graft.sources.Sources.longSchema(metricLongNames))
-    val p = Pipeline.shape(long, "raw").queryExecution.executedPlan.toString
+    val qe = Pipeline.shape(long, "raw").queryExecution
+    val p = qe.executedPlan.toString
     assert("FileScan csv".r.findAllIn(p).size == 1,
       "the long CSV must be read exactly once by the pivot plan")
     val ex = p.linesIterator.filter(_.contains("Exchange ")).toSeq
@@ -252,6 +253,14 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     assert(ex.exists(_.contains("rangepartitioning")),
       "the GEOID presentation sort is the only other exchange")
     assert(p.contains("partial_max_by"), "pivot must partial-aggregate map-side")
+    // one row-struct max_by per year plus the carries, not one per cell
+    val aggs = qe.sparkPlan.collect {
+      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
+    }
+    val bound = graft.config.EtlConfig.allYears.size +
+      graft.config.EtlConfig.idColumns.count(_ != "GEOID")
+    assert(aggs.nonEmpty && aggs.forall(_.aggregateExpressions.size <= bound),
+      s"pivot aggregates: ${aggs.map(_.aggregateExpressions.size)} > $bound")
   }
 
   test("composed runRegion is scan-once: every stage reuses one cached pivot (SURVEY §3.1)") {

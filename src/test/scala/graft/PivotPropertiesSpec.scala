@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,22 +13,55 @@ import graft.operators.{Extents, Shape}
 class PivotPropertiesSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
 
+  /** Long rows over a few ids and years with two metrics (`w` nullable)
+    * and one carry column (`n`). Ids repeat, so (id, year) rows repeat,
+    * and some pairs get extra rows. `ord` values are unique; some rows
+    * have a null `ord` (their values are -1 / "ghost") and must never win.
+    */
   private def randomLong(seed: Int) = {
     val rnd = new scala.util.Random(seed)
     val years = Seq("00", "01", "02")
-    val rows = for {
+    val pairs = for {
       id <- (0 until 30).map(i => f"${rnd.nextInt(20)}%05d")
       y <- years if rnd.nextBoolean()
-    } yield (id, y, rnd.nextDouble() * 100, rnd.nextLong(1000000))
-    rows.toDF("id", "yy", "v", "ord")
+    } yield (id, y)
+    val rows = pairs ++ pairs.filter(_ => rnd.nextInt(3) == 0)
+    val ords = rnd.shuffle((0L until rows.size).toList)
+    val ordered = rows.zip(ords).map { case ((id, y), o) =>
+      (id, y, rnd.nextDouble() * 100,
+        if (rnd.nextInt(3) == 0) None else Option(rnd.nextInt(1000)), s"n$o", Option(o))
+    }
+    val ghosts = pairs.filter(_ => rnd.nextInt(4) == 0)
+      .map { case (id, y) => (id, y, -1.0, Option(-1), "ghost", Option.empty[Long]) }
+    (ordered ++ ghosts).toDF("id", "yy", "v", "w", "n", "ord")
+  }
+
+  /** Reference pivot: one `max_by(when…, when…)` aggregate per
+    * metric × year cell. */
+  private def perCellPivot(long: DataFrame, carry: Seq[String],
+                           metrics: Seq[String], years: Seq[String]) = {
+    val cells = for (m <- metrics; y <- years) yield max_by(
+      when($"yy" === y, col(m)), when($"yy" === y, $"ord")).as(s"$m-$y")
+    val aggs = carry.map(c => max_by(col(c), $"ord").as(c)) ++ cells
+    long.groupBy("id").agg(aggs.head, aggs.tail: _*).orderBy("id")
   }
 
   test("pivot row count == distinct ids; cells match max_by oracle (seeds)") {
+    val years = Seq("00", "01", "02", "03") // "03" has no rows
     for (seed <- Seq(1, 7, 42)) {
       val long = randomLong(seed).cache()
-      val wide = Shape.pivotWide(long, "id", Nil, "yy", Seq("v"),
-        Seq("00", "01", "02"), "ord")
+      val lastNullDups = long.filter($"ord".isNotNull).groupBy("id", "yy")
+        .agg(count(lit(1)).as("k"), max_by($"w", $"ord").as("w"))
+        .filter($"k" > 1 && $"w".isNull).count()
+      assert(lastNullDups > 0, "some duplicate's last row must hold a null cell")
+      val wide = Shape.pivotWide(long, "id", Seq("n"), "yy", Seq("v", "w"),
+        years, "ord")
       assert(wide.count() == long.select("id").distinct().count())
+      // cell for cell against the per-cell formulation
+      val oracle = perCellPivot(long, Seq("n"), Seq("v", "w"), years)
+      assert(wide.columns.toSeq == oracle.columns.toSeq)
+      assert(wide.collect().map(_.toSeq).toSeq ==
+        oracle.collect().map(_.toSeq).toSeq)
       // unpivot(pivot) == last-wins-reduced original
       val back = wide.selectExpr("id",
         "stack(3, '00', `v-00`, '01', `v-01`, '02', `v-02`) as (yy, v)")
